@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 
@@ -12,11 +13,13 @@ from webscraping_video_pipeline_spark.session import get_spark
 
 N_PAGES = 1200
 N_SEEDS = 300
+# local[N] and shuffle partitions; results must not depend on it
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
 
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="tests", cpus=8, shuffle_partitions=8)
+    s = get_spark(app_name="tests", cpus=CPUS, shuffle_partitions=CPUS)
     yield s
 
 

@@ -87,8 +87,9 @@ def _land_seeds(seeds_dir, name, pdf):
 def test_stream_crawl_rounds_match_batch_engine(spark, tmp_path):
     """Batch ≡ stream: the full-round streaming twin (retry/backoff,
     3-strike circuit breaker, robots, OUTLINK DISCOVERY) produces a
-    fetch_log row-identical to CrawlEngine's over 3 rounds on the same
-    fixtures, misses and all."""
+    fetch_log and an extracted table row-identical to CrawlEngine's over 3
+    rounds on the same fixtures, misses and all, and its pending state
+    after every round equals the batch frontier snapshot of that round."""
     import os as _os
 
     import pandas as pd
@@ -108,16 +109,9 @@ def test_stream_crawl_rounds_match_batch_engine(spark, tmp_path):
     policy = spark.createDataFrame(synth.gen_host_policy_pdf(N), schema=schemas.HOST_POLICY)
     robots = spark.createDataFrame(synth.gen_robots_pdf(N), schema=schemas.ROBOTS_CACHE)
 
+    cfg = CrawlConfig(n_shards=8, salts=4, discover_outlinks=True)
     # batch reference (real robots: disallow filters + crawl-delay overrides)
-    eng = CrawlEngine(
-        spark,
-        str(tmp_path / "batch"),
-        pages,
-        seeds,
-        policy,
-        robots,
-        CrawlConfig(n_shards=8, salts=4, discover_outlinks=True),
-    )
+    eng = CrawlEngine(spark, str(tmp_path / "batch"), pages, seeds, policy, robots, cfg)
     eng.run(ROUNDS)
     want = {
         (r["round"], r["host"], r["slot"], r["canon_url"], r["scheduled_ts"], r["status"])
@@ -132,7 +126,7 @@ def test_stream_crawl_rounds_match_batch_engine(spark, tmp_path):
     _os.makedirs(seeds_dir)
     prepared = prepare_pages(pages)
     _land_seeds(seeds_dir, "b0", seeds_pdf)
-    stream_crawl_rounds(spark, seeds_dir, wd, prepared, policy, robots_cache=robots, salts=4, discover_outlinks=True)
+    stream_crawl_rounds(spark, seeds_dir, wd, prepared, policy, robots_cache=robots, cfg=cfg)
     pump_url = (
         spark.read.parquet(f"{wd}/fetch_log")
         .filter(F.col("status") == "fetched")
@@ -149,7 +143,7 @@ def test_stream_crawl_rounds_match_batch_engine(spark, tmp_path):
     )
     for k in range(1, ROUNDS):
         _land_seeds(seeds_dir, f"b{k}", pump_pdf)
-        stream_crawl_rounds(spark, seeds_dir, wd, prepared, policy, robots_cache=robots, salts=4, discover_outlinks=True)
+        stream_crawl_rounds(spark, seeds_dir, wd, prepared, policy, robots_cache=robots, cfg=cfg)
 
     got = {
         (r["batch_id"], r["host"], r["slot"], r["canon_url"], r["scheduled_ts"], r["status"])
@@ -158,6 +152,29 @@ def test_stream_crawl_rounds_match_batch_engine(spark, tmp_path):
     assert got == want, (
         f"stream-only={sorted(got - want)[:5]} batch-only={sorted(want - got)[:5]}"
     )
+
+    ext_cols = ["url_hash", "canon_url", "url", "warc_ts", "lang", "extracted_text", "n_chars"]
+    want_ext = sorted(
+        (r["round"], *(r[c] for c in ext_cols))
+        for r in eng.catalog.read_appended("extracted").collect()
+    )
+    got_ext = sorted(
+        (r["batch_id"], *(r[c] for c in ext_cols))
+        for r in spark.read.parquet(f"{wd}/extracted").collect()
+    )
+    assert got_ext == want_ext and len(want_ext) > 0
+
+    # the stream's pending state IS the batch frontier, round by round
+    def state(df):
+        return sorted(tuple(r) for r in df.select(*schemas.FRONTIER.fieldNames()).collect())
+
+    for k in range(ROUNDS):
+        want_state = state(eng.catalog.read_snapshot("frontier", k))
+        got_state = state(spark.read.parquet(f"{wd}/pending/batch_id={k}"))
+        assert got_state == want_state and len(want_state) > 0, (
+            f"round {k}: stream-only={sorted(set(got_state) - set(want_state))[:3]} "
+            f"batch-only={sorted(set(want_state) - set(got_state))[:3]}"
+        )
 
 
 def test_stream_crawl_restart_mid_batch_idempotent(spark, tmp_path):
@@ -169,10 +186,11 @@ def test_stream_crawl_restart_mid_batch_idempotent(spark, tmp_path):
     import shutil
 
     from webscraping_video_pipeline_spark import schemas, synth
-    from webscraping_video_pipeline_spark.plans.crawl import prepare_pages
+    from webscraping_video_pipeline_spark.plans.crawl import CrawlConfig, prepare_pages
     from webscraping_video_pipeline_spark.streaming.micro_batch import stream_crawl_rounds
 
     N = 200
+    cfg = CrawlConfig(salts=4, discover_outlinks=False)
     pages = spark.createDataFrame(synth.gen_pages_pdf(N), schema=schemas.PAGES)
     seeds_pdf = synth.gen_seeds_pdf(40, N)
     policy = spark.createDataFrame(synth.gen_host_policy_pdf(N), schema=schemas.HOST_POLICY)
@@ -180,7 +198,7 @@ def test_stream_crawl_restart_mid_batch_idempotent(spark, tmp_path):
     _os.makedirs(seeds_dir)
     prepared = prepare_pages(pages)
     _land_seeds(seeds_dir, "b0", seeds_pdf)
-    stream_crawl_rounds(spark, seeds_dir, wd, prepared, policy, salts=4)
+    stream_crawl_rounds(spark, seeds_dir, wd, prepared, policy, cfg=cfg)
 
     def snap(path):
         return sorted(tuple(r) for r in spark.read.parquet(path).collect())
@@ -190,7 +208,7 @@ def test_stream_crawl_restart_mid_batch_idempotent(spark, tmp_path):
 
     # fully-committed replay (fresh checkpoint redelivers batch 0): skipped
     shutil.rmtree(f"{wd}/ckpt")
-    stream_crawl_rounds(spark, seeds_dir, wd, prepared, policy, salts=4)
+    stream_crawl_rounds(spark, seeds_dir, wd, prepared, policy, cfg=cfg)
     assert snap(f"{wd}/fetch_log") == first_fetch
     assert snap(f"{wd}/seen") == first_seen
 
@@ -198,7 +216,7 @@ def test_stream_crawl_restart_mid_batch_idempotent(spark, tmp_path):
     # redeliver — the batch recomputes and rewrites identical outputs
     shutil.rmtree(f"{wd}/seen/batch_id=0")
     shutil.rmtree(f"{wd}/ckpt")
-    stream_crawl_rounds(spark, seeds_dir, wd, prepared, policy, salts=4)
+    stream_crawl_rounds(spark, seeds_dir, wd, prepared, policy, cfg=cfg)
     assert snap(f"{wd}/fetch_log") == first_fetch
     assert snap(f"{wd}/seen") == first_seen
 

@@ -13,7 +13,7 @@ crawl round commits atomically:
 A restart reads the manifest and resumes at ``last_round + 1``; staged or
 renamed-but-unmanifested data from a crashed round is invisible (reads are
 manifest-gated) and is overwritten by the re-run, so crash-at-any-point
-re-execution is idempotent — verified by ``tests/test_resume.py``.
+re-execution is idempotent — verified by ``tests/test_crawl_resume.py``.
 
 Two table kinds:
 
@@ -27,10 +27,9 @@ Two table kinds:
   per-round deltas only — the 10^10-row standing set is never rewritten
   (Iceberg-append analog).
 
-When an Iceberg runtime jar is on the classpath, ``use_iceberg=True`` routes
-the same API through a real Iceberg catalog (``writeTo(...).append()`` /
-``createOrReplace``); the sandbox has no jar and no network, so the parquet
-path is what tests exercise.
+Every table is plain parquet under ``root`` — the only storage path. How
+the same snapshot / append / manifest-commit model maps onto Iceberg tables
+at cluster scale is in ``SCALE.md``.
 """
 
 from __future__ import annotations
@@ -47,28 +46,10 @@ _MANIFEST = "_MANIFEST.json"
 
 
 class Catalog:
-    def __init__(self, spark: SparkSession, root: str, use_iceberg: bool = False):
+    def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = Path(root)
         self.root.mkdir(parents=True, exist_ok=True)
-        self.use_iceberg = use_iceberg
-        if use_iceberg:  # pragma: no cover - no Iceberg jar in the sandbox
-            self._init_iceberg()
-
-    def _init_iceberg(self) -> None:  # pragma: no cover
-        """Route through org.apache.iceberg.spark.SparkCatalog when available."""
-        jvm_ok = False
-        try:
-            self.spark.conf.get("spark.sql.catalog.engine")
-            jvm_ok = True
-        except Exception:
-            pass
-        if not jvm_ok:
-            raise RuntimeError(
-                "Iceberg catalog requested but no runtime jar configured; "
-                "set spark.sql.catalog.engine=org.apache.iceberg.spark.SparkCatalog "
-                "and spark.sql.catalog.engine.warehouse before building the session"
-            )
 
     # ------------------------------------------------------------- manifest
     def _manifest_path(self) -> Path:

@@ -4,22 +4,30 @@ Reference semantic preserved: ``process_batch`` loops rounds until a budget
 target, checkpointing JSON state after every batch and resuming from it
 (``enhanced_batch_processor.py:364-445,740-764``, ``main.py:187-196``).
 
-One round is ONE declarative DataFrame job::
+One round is ONE declarative DataFrame job, defined once here as three
+plain functions (the round kernel)::
 
-    frontier ──► due-filter ──► J2 dedupe (Bloom pre-filter + exact anti-join)
-             ──► P2 robots as-of + disallow filter
-             ──► P1 politeness slots (per-host token bucket, salted top-k)
-             ──► J5 fetch join against pages
-             ──► E1 extract_text (Arrow pandas UDF)
-             ──► writes: fetch_log, extracted, round_metrics (append)
-                        url_seen', frontier', bloom_shards' (snapshot)
-             ──► catalog.commit_round(k)          # the single atomic commit
+    schedule_frontier   frontier ──► due-filter
+                        ──► J2 dedupe (Bloom pre-filter + exact anti-join)
+                        ──► P2 robots as-of (resolved once) + disallow filter
+                        ──► P1 politeness slots (per-host token bucket,
+                            robots crawl-delay overrides the host policy)
+    fetch_round         ──► J5 fetch join against pages
+                        ──► E1 extract_text + href harvest (one html pass)
+                        ──► retry backoff, 3-strike breaker, url_seen delta
+    advance_frontier    ──► not-admitted + deferred + retries + discovered
+                        ──► deterministic merge ──► anti-join seen = frontier'
 
-plus outlink discovery (href harvest from fetched html, JVM-side regex) and
-fetch-miss retry with exponential backoff
-(``next_attempt_round = k + 2**attempts`` — the computed analog of the
-reference's retry sleep, ``cloud_storage.py:159-208``) and a 3-strike circuit
-breaker per URL (``parallel_scraper_manager.py:171-178``).
+Misses back off exponentially (``next_attempt_round = k + 2**attempts`` —
+the computed analog of the reference's retry sleep,
+``cloud_storage.py:159-208``) and strike out after ``max_attempts``
+(``parallel_scraper_manager.py:171-178``).
+
+The callers keep only their own I/O. ``CrawlEngine.run_round`` writes
+fetch_log, extracted, url_seen and round_metrics (append), frontier and
+the seen-filter shards (snapshot), then ``catalog.commit_round(k)`` — the
+single atomic commit. The streaming twins (``streaming/micro_batch.py``)
+write the same tables as ``batch_id`` partitions under a commit marker.
 
 Determinism: round_start_ts is a pure function of the round number; every
 ordering has a total tiebreak; politeness slots are computed, never slept —
@@ -30,8 +38,9 @@ from __future__ import annotations
 
 import time
 from dataclasses import dataclass
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import Catalog
@@ -41,8 +50,10 @@ from ..operators.dedup import build_bloom_shards, dedupe_against_seen
 from ..operators.frontier import fetch_join
 from ..operators.politeness import max_bucket_capacity, schedule_round
 from ..operators.robots import apply_robots, resolve_robots_asof
+from ..schemas import FRONTIER
 
 BASE_ROUND_TS = "2025-06-01 00:00:00"
+FRONTIER_COLS = FRONTIER.fieldNames()
 
 
 @dataclass
@@ -68,7 +79,7 @@ class CrawlConfig:
     cuckoo_buckets_per_shard: int = 1 << 12
 
 
-def _round_ts(round_no: int, cfg: CrawlConfig):
+def round_ts(round_no: int, cfg: CrawlConfig) -> Column:
     return F.lit(BASE_ROUND_TS).cast("timestamp") + F.make_interval(
         secs=F.lit(round_no * cfg.round_interval_s)
     )
@@ -86,8 +97,6 @@ def canonicalize_candidates(df: DataFrame, url_col: str = "url") -> DataFrame:
 def prepare_pages(pages: DataFrame) -> DataFrame:
     """Canonicalize + dedup the pages table to one row per canon_url
     (latest warc_ts wins — the as-of fetch target)."""
-    from pyspark.sql import Window
-
     canon = canonicalize_candidates(pages, "url")
     w = Window.partitionBy("url_hash").orderBy(
         F.col("warc_ts").desc(), F.col("url").asc()
@@ -96,6 +105,224 @@ def prepare_pages(pages: DataFrame) -> DataFrame:
         canon.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
+    )
+
+
+def seed_frontier(seeds: DataFrame) -> DataFrame:
+    """Seed rows (``schemas.SEEDS``) as frontier rows, due at once."""
+    return canonicalize_candidates(seeds, "url").select(
+        "url",
+        "canon_url",
+        "url_hash",
+        "host",
+        "priority",
+        "source",
+        "discovered_ts",
+        F.lit(0).alias("attempts"),
+        F.lit(0).alias("next_attempt_round"),
+    )
+
+
+# ------------------------------------------------------------- round kernel
+
+
+def schedule_frontier(
+    frontier: DataFrame,
+    round_no: int,
+    url_seen: DataFrame | None,
+    shards: DataFrame | None,
+    host_policy: DataFrame,
+    robots_cache: DataFrame | None,
+    cfg: CrawlConfig,
+    max_capacity: int,
+) -> tuple[DataFrame, DataFrame]:
+    """Admit round ``round_no`` from ``frontier`` (``schemas.FRONTIER``).
+
+    Returns ``(scheduled, waiting)``: the cached admitted rows with slot /
+    scheduled_ts, and the frontier rows that stay for a later round (due
+    but not admitted, plus not yet due). Robots-disallowed and already-seen
+    URLs are in neither. ``shards`` is the seen-set prefilter (None: exact
+    anti-join only); ``robots_cache`` None skips the robots stage.
+    """
+    ts = round_ts(round_no, cfg)
+    due = frontier.filter(F.col("next_attempt_round") <= round_no)
+    deferred = frontier.filter(F.col("next_attempt_round") > round_no)
+
+    # J2: within-batch + cross-round dedup (exact, filter-accelerated)
+    allowed = dedupe_against_seen(
+        due, url_seen, shards, n_shards=cfg.n_shards, prefilter=cfg.seen_filter
+    )
+    policy = host_policy
+    if robots_cache is not None:
+        # P2: robots as-of + disallow; its crawl delay overrides the policy
+        robots = resolve_robots_asof(robots_cache, ts)
+        allowed = apply_robots(allowed, robots, url_col="canon_url").drop("robots_delay_s")
+        policy = (
+            host_policy.join(
+                robots.select("host", F.col("crawl_delay_s").alias("_rd")), "host", "left"
+            )
+            .withColumn(
+                "crawl_delay_s",
+                F.coalesce(
+                    F.nanvl(F.col("_rd"), F.lit(None).cast("double")), F.col("crawl_delay_s")
+                ),
+            )
+            .drop("_rd")
+        )
+    allowed = allowed.withColumn("priority", F.coalesce(F.col("priority"), F.lit(0.0)))
+
+    # P1: politeness slots
+    scheduled = schedule_round(
+        allowed,
+        policy,
+        round_start_ts=ts,
+        default_delay_s=cfg.default_delay_s,
+        default_capacity=cfg.default_capacity,
+        salts=cfg.salts,
+        max_capacity=max_capacity,
+    ).cache()
+    waiting = (
+        allowed.join(scheduled.select("url_hash"), "url_hash", "left_anti")
+        .select(*FRONTIER_COLS)
+        .unionByName(deferred.select(*FRONTIER_COLS))
+    )
+    return scheduled, waiting
+
+
+class Fetch(NamedTuple):
+    rows: DataFrame  # cached fetch-joined rows; unpersist once written
+    fetch_log: DataFrame
+    extracted: DataFrame
+    retryable: DataFrame  # FRONTIER rows due again after backoff
+    newly_seen: DataFrame  # the round's url_seen delta
+
+
+def fetch_round(
+    scheduled: DataFrame, pages: DataFrame, round_no: int, cfg: CrawlConfig
+) -> Fetch:
+    """J5 + E1 against ``pages`` (``prepare_pages`` output), plus the
+    round's retry bookkeeping and url_seen delta."""
+    # Both html consumers (extract, outlink harvest) run in ONE projection
+    # so the BinaryType html column streams through the scan exactly once
+    # and is NEVER cached — only the skinny derived columns persist
+    # (caching page bytes is the first executor OOM at 100× scale).
+    joined = fetch_join(
+        scheduled,
+        pages.select("canon_url", F.col("warc_ts"), "html", "lang"),
+    )
+    derived = [extract_text_udf(F.col("html")).alias("extracted_text")]
+    if cfg.discover_outlinks:
+        derived.append(
+            F.regexp_extract_all(
+                F.decode(F.col("html"), "utf-8"), F.lit('href="([^"]+)"'), F.lit(1)
+            ).alias("_outlinks")
+        )
+    fetched = joined.select(
+        *[c for c in joined.columns if c != "html"], *derived
+    ).cache()
+    ok = fetched.filter(F.col("status") == "fetched")
+    round_col = F.lit(round_no).cast("int").alias("round")
+    fetch_log = fetched.select(
+        round_col,
+        "url_hash",
+        "canon_url",
+        "host",
+        "scheduled_ts",
+        F.col("slot").cast("int"),
+        "status",
+    )
+    extracted = ok.select(
+        round_col,
+        "url_hash",
+        "canon_url",
+        F.col("url"),
+        "warc_ts",
+        "lang",
+        "extracted_text",
+        F.length("extracted_text").cast("int").alias("n_chars"),
+    )
+
+    # retry bookkeeping: misses back off exponentially, 3 strikes out
+    misses = (
+        fetched.filter(F.col("status") == "miss")
+        .select(*FRONTIER_COLS)
+        .withColumn("attempts", F.col("attempts") + 1)
+        .withColumn(
+            "next_attempt_round",
+            F.lit(round_no) + F.pow(F.lit(2.0), F.col("attempts")).cast("int"),
+        )
+    )
+    retryable = misses.filter(F.col("attempts") < cfg.max_attempts)
+    exhausted = misses.filter(F.col("attempts") >= cfg.max_attempts)
+
+    # url_seen delta: fetched + exhausted are now permanently seen. Deltas
+    # never overlap prior seen (scheduled rows passed the exact anti-join)
+    # nor each other within a round (in-batch dedupe), so the full set is
+    # the plain union of the committed deltas.
+    newly_seen = (
+        ok.select("url_hash", "canon_url")
+        .unionByName(exhausted.select("url_hash", "canon_url"))
+        .withColumn("seen_round", F.lit(round_no).cast("int"))
+    )
+    return Fetch(fetched, fetch_log, extracted, retryable, newly_seen)
+
+
+def advance_frontier(
+    waiting: DataFrame,
+    fetch: Fetch,
+    round_no: int,
+    cfg: CrawlConfig,
+    url_seen: DataFrame | None,
+    seen_delta: DataFrame,
+) -> DataFrame:
+    """frontier': ``waiting`` + retries + discovered outlinks, minus every
+    URL seen up to and including this round (``url_seen`` ∪ ``seen_delta``).
+
+    The merge is DETERMINISTIC (north_rule): an existing row beats a
+    discovered one on the same url_hash (explicit precedence rank), then
+    the (priority DESC, canon_url ASC, url ASC) survivor rule of the
+    in-batch dedupe (dedup.dedupe_against_seen) picks among duplicates.
+    """
+    merged = waiting.unionByName(fetch.retryable).withColumn("_cat", F.lit(0))
+    if cfg.discover_outlinks:
+        # hrefs were harvested in the single html pass; attribute values
+        # are HTML-escaped in markup, so undo the one entity that URL query
+        # strings legitimately contain (&amp;)
+        hrefs = (
+            fetch.rows.filter(F.col("status") == "fetched")
+            .select(F.explode(F.col("_outlinks")).alias("_raw"))
+            .select(
+                F.regexp_replace(F.col("_raw"), F.lit("&amp;"), F.lit("&")).alias("url")
+            )
+            .filter(F.col("url").startswith("http"))
+        )
+        discovered = canonicalize_candidates(hrefs, "url").select(
+            "url",
+            "canon_url",
+            "url_hash",
+            "host",
+            (1.0 / (1 + F.pmod(F.xxhash64("canon_url"), F.lit(1000)))).alias("priority"),
+            F.lit("discovered").alias("source"),
+            round_ts(round_no, cfg).alias("discovered_ts"),
+            F.lit(0).alias("attempts"),
+            F.lit(round_no + 1).alias("next_attempt_round"),
+            F.lit(1).alias("_cat"),
+        )
+        merged = merged.unionByName(discovered)
+    w_merge = Window.partitionBy("url_hash").orderBy(
+        F.col("_cat").asc(),
+        F.col("priority").desc(),
+        F.col("canon_url").asc(),
+        F.col("url").asc(),  # total order: raw spellings of one canon
+    )
+    seen = seen_delta.select("url_hash")
+    if url_seen is not None:
+        seen = url_seen.select("url_hash").unionByName(seen)
+    return (
+        merged.withColumn("_rn", F.row_number().over(w_merge))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn", "_cat")
+        .join(seen, "url_hash", "left_anti")
     )
 
 
@@ -147,29 +374,14 @@ class CrawlEngine:
             prepare_pages(self._pages_raw).write.mode("overwrite").parquet(self._pages_path)
         return self.spark.read.parquet(self._pages_path)
 
-    def _initial_frontier(self) -> DataFrame:
-        return canonicalize_candidates(self._seeds, "url").select(
-            "url",
-            "canon_url",
-            "url_hash",
-            "host",
-            "priority",
-            "source",
-            "discovered_ts",
-            F.lit(0).alias("attempts"),
-            F.lit(0).alias("next_attempt_round"),
-        )
-
     # ---------------------------------------------------------------- round
     def run_round(self, round_no: int) -> dict:
         cfg, cat = self.cfg, self.catalog
         pages = self._ensure_prepared()
-        round_ts = _round_ts(round_no, cfg)
-        lineage: list[DataFrame] = []
 
         frontier = cat.read_snapshot("frontier", round_no - 1)
         if frontier is None:
-            frontier = self._initial_frontier()
+            frontier = seed_frontier(self._seeds)
         # url_seen is APPEND-ONLY: each round adds a delta partition (rounds
         # never re-see a URL by construction), so the standing 10^10-row set
         # is never rewritten — the parquet analog of Iceberg appends
@@ -179,139 +391,40 @@ class CrawlEngine:
             cat.read_snapshot(shards_table, round_no - 1) if cfg.use_bloom else None
         )
 
-        due = frontier.filter(F.col("next_attempt_round") <= round_no)
-        deferred = frontier.filter(F.col("next_attempt_round") > round_no)
-
-        # J2: within-batch + cross-round dedup (exact, filter-accelerated)
         t0 = time.monotonic()
-        fresh = dedupe_against_seen(
-            due, url_seen, shards, n_shards=cfg.n_shards, prefilter=cfg.seen_filter
+        scheduled, waiting = schedule_frontier(
+            frontier, round_no, url_seen, shards, self.host_policy,
+            self.robots_cache, cfg, self._max_capacity,
         )
-
-        # P2: robots as-of + disallow
-        robots = resolve_robots_asof(self.robots_cache, round_ts)
-        allowed = apply_robots(fresh, robots, url_col="canon_url")
-
-        # P1: politeness slots; robots delay overrides host_policy where set
-        policy = self.host_policy
-        allowed = allowed.withColumn(
-            "priority", F.coalesce(F.col("priority"), F.lit(0.0))
-        )
-        scheduled = schedule_round(
-            allowed.drop("robots_delay_s"),
-            policy.join(
-                resolve_robots_asof(self.robots_cache, round_ts).select(
-                    "host", F.col("crawl_delay_s").alias("_rd")
-                ),
-                "host",
-                "left",
-            )
-            .withColumn("crawl_delay_s", F.coalesce(
-                    F.nanvl(F.col("_rd"), F.lit(None).cast("double")), F.col("crawl_delay_s")
-                ))
-            .drop("_rd"),
-            round_start_ts=round_ts,
-            default_delay_s=cfg.default_delay_s,
-            default_capacity=cfg.default_capacity,
-            salts=cfg.salts,
-            max_capacity=self._max_capacity,
-        )
-        scheduled.cache()
         t_sched = (time.monotonic() - t0) * 1000
-        lineage.append(partition_lineage(scheduled, round_no, "scheduled", t_sched))
+        lineage = partition_lineage(scheduled, round_no, "scheduled", t_sched)
 
-        # J5 + E1: fetch + extract. Both html consumers (extract, outlink
-        # harvest) run in ONE projection so the BinaryType html column
-        # streams through the scan exactly once and is NEVER cached — only
-        # the skinny derived columns persist (caching page bytes is the
-        # first executor OOM at 100× scale).
         t1 = time.monotonic()
-        joined = fetch_join(
-            scheduled,
-            pages.select("canon_url", F.col("warc_ts"), "html", "lang"),
-        )
-        derived = [extract_text_udf(F.col("html")).alias("extracted_text")]
-        if cfg.discover_outlinks:
-            derived.append(
-                F.regexp_extract_all(
-                    F.decode(F.col("html"), "utf-8"), F.lit('href="([^"]+)"'), F.lit(1)
-                ).alias("_outlinks")
-            )
-        fetched = joined.select(
-            *[c for c in joined.columns if c != "html"], *derived
-        )
-        fetched.cache()
+        fetch = fetch_round(scheduled, pages, round_no, cfg)
         # round counters ride the fetch_log WRITE as observed metrics — no
         # separate count() jobs in the hot loop (every count re-executes a
         # full DAG or re-scans the cache; at 10^8-row rounds that is two
         # wasted cluster passes per round)
-        from pyspark.sql import Observation
-
         obs = Observation(f"round_{round_no}")
-        fetch_log = fetched.select(
-            F.lit(round_no).cast("int").alias("round"),
-            "url_hash",
-            "canon_url",
-            "host",
-            "scheduled_ts",
-            F.col("slot").cast("int"),
-            "status",
-        ).observe(
+        fetch_log = fetch.fetch_log.observe(
             obs,
             F.count(F.lit(1)).alias("n_scheduled"),
             F.count(F.when(F.col("status") == "fetched", 1)).alias("n_fetched"),
         )
-        extracted = fetched.filter(F.col("status") == "fetched").select(
-            F.lit(round_no).cast("int").alias("round"),
-            "url_hash",
-            "canon_url",
-            F.col("url"),
-            "warc_ts",
-            "lang",
-            "extracted_text",
-            F.length("extracted_text").cast("int").alias("n_chars"),
-        )
         cat.append_round("fetch_log", fetch_log, round_no)
         counters = obs.get  # available: the write above ran the plan
         n_scheduled, n_fetched = counters["n_scheduled"], counters["n_fetched"]
-        cat.append_round("extracted", extracted, round_no)
+        cat.append_round("extracted", fetch.extracted, round_no)
         t_fetch = (time.monotonic() - t1) * 1000
-        lineage.append(partition_lineage(fetched, round_no, "fetched", t_fetch))
-
-        # retry bookkeeping: misses back off exponentially, 3 strikes out
-        misses = (
-            fetched.filter(F.col("status") == "miss")
-            .select(
-                "url", "canon_url", "url_hash", "host", "priority", "source",
-                "discovered_ts", "attempts", "next_attempt_round",
-            )
-            .withColumn("attempts", F.col("attempts") + 1)
-            .withColumn(
-                "next_attempt_round",
-                F.lit(round_no) + F.pow(F.lit(2.0), F.col("attempts")).cast("int"),
-            )
+        lineage = lineage.unionByName(
+            partition_lineage(fetch.rows, round_no, "fetched", t_fetch)
         )
-        retryable = misses.filter(F.col("attempts") < cfg.max_attempts)
-        exhausted = misses.filter(F.col("attempts") >= cfg.max_attempts)
 
-        # url_seen delta: fetched + exhausted are now permanently seen.
-        # Deltas never overlap prior seen (scheduled rows passed the exact
-        # anti-join) nor each other within a round (in-batch dedupe), so the
-        # full set is the plain union of committed delta partitions —
-        # appended, O(delta) per round, never a full-table rewrite.
-        newly_seen = (
-            fetched.filter(F.col("status") == "fetched")
-            .select("url_hash", "canon_url")
-            .unionByName(exhausted.select("url_hash", "canon_url"))
-            .withColumn("seen_round", F.lit(round_no).cast("int"))
-        )
-        cat.append_round("url_seen", newly_seen, round_no)
-        # re-read the materialized delta so downstream stages don't
+        # url_seen delta is appended, O(delta) per round, never a full-table
+        # rewrite; re-read the materialized delta so downstream stages don't
         # recompute the lineage (round not yet committed; direct path)
+        cat.append_round("url_seen", fetch.newly_seen, round_no)
         seen_delta = self.spark.read.parquet(str(cat.root / "url_seen" / f"round={round_no}"))
-        url_seen_next = (
-            seen_delta if url_seen is None else url_seen.unionByName(seen_delta)
-        )
 
         if cfg.use_bloom and cfg.seen_filter == "cuckoo":
             # incremental: insert the delta into the standing cuckoo tables
@@ -347,84 +460,21 @@ class CrawlEngine:
             )
             cat.write_snapshot(shards_table, bloom_next, round_no)
 
-        # outlink discovery: hrefs were harvested in the single html pass
-        # above; attribute values are HTML-escaped in markup, so undo the
-        # one entity that URL query strings legitimately contain (&amp;)
-        discovered = None
-        if cfg.discover_outlinks:
-            hrefs = (
-                fetched.filter(F.col("status") == "fetched")
-                .select(F.explode(F.col("_outlinks")).alias("_raw"))
-                .select(
-                    F.regexp_replace(F.col("_raw"), F.lit("&amp;"), F.lit("&")).alias("url")
-                )
-                .filter(F.col("url").startswith("http"))
-            )
-            discovered = canonicalize_candidates(hrefs, "url").select(
-                "url",
-                "canon_url",
-                "url_hash",
-                "host",
-                (1.0 / (1 + F.pmod(F.xxhash64("canon_url"), F.lit(1000)))).alias("priority"),
-                F.lit("discovered").alias("source"),
-                round_ts.alias("discovered_ts"),
-                F.lit(0).alias("attempts"),
-                F.lit(round_no + 1).alias("next_attempt_round"),
-            )
-
-        # frontier': not-admitted survivors + deferred + retries + discoveries,
-        # minus everything now seen. The merge is DETERMINISTIC (north_rule):
-        # survivors/deferred/retryable carry pairwise-disjoint url_hashes by
-        # construction (all descend from the already-unique previous frontier),
-        # so the only possible collision is discovered-vs-existing — resolved
-        # by an explicit precedence rank (existing wins), then the same
-        # (priority DESC, canon_url ASC) survivor rule as the in-batch dedupe
-        # (dedup.dedupe_against_seen) for discovered-internal duplicates.
-        fcols = [f.name for f in frontier.schema.fields]
-        survivors = allowed.drop("robots_delay_s").join(
-            scheduled.select("url_hash"), "url_hash", "left_anti"
-        ).select(*fcols)
-        existing = (
-            survivors.unionByName(deferred.select(*fcols))
-            .unionByName(retryable.select(*fcols))
-            .withColumn("_cat", F.lit(0))
-        )
-        frontier_next = existing
-        if discovered is not None:
-            frontier_next = existing.unionByName(
-                discovered.select(*fcols).withColumn("_cat", F.lit(1))
-            )
-        from pyspark.sql import Window
-
-        w_merge = Window.partitionBy("url_hash").orderBy(
-            F.col("_cat").asc(),
-            F.col("priority").desc(),
-            F.col("canon_url").asc(),
-            F.col("url").asc(),  # total order: raw spellings of one canon
-        )
-        frontier_next = (
-            frontier_next.withColumn("_rn", F.row_number().over(w_merge))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn", "_cat")
-            .join(url_seen_next.select("url_hash"), "url_hash", "left_anti")
-        )
+        frontier_next = advance_frontier(waiting, fetch, round_no, cfg, url_seen, seen_delta)
         cat.write_snapshot(
             "frontier",
             frontier_next.repartition(self.spark.sparkContext.defaultParallelism, "host"),
             round_no,
         )
 
-        metrics = lineage[0]
-        for extra in lineage[1:]:
-            metrics = metrics.unionByName(extra)
-        cat.append_round("round_metrics", metrics, round_no)
+        cat.append_round("round_metrics", lineage, round_no)
 
         cat.commit_round(
             round_no,
             {"n_scheduled": n_scheduled, "n_fetched": n_fetched},
         )
         scheduled.unpersist()
-        fetched.unpersist()
+        fetch.rows.unpersist()
         return {"round": round_no, "n_scheduled": n_scheduled, "n_fetched": n_fetched}
 
     # ------------------------------------------------------------------ TTL

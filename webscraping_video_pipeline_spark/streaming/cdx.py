@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .commit import batch_committed, mark_committed, scrub_partial
+from .commit import batch_committed, mark_committed, scrub_partial, write_batch
 from .micro_batch import _has_batches
 
 # Mirrors the driver testdata `documents` table.
@@ -117,13 +117,8 @@ def stream_cdx_index(spark: SparkSession, docs_dir: str, workdir: str) -> None:
             .alias("rec_offset"),
             "rec_len",
             "digest",
-        ).withColumn("batch_id", F.lit(bid).cast("long"))
-        (
-            out.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(index_dir)
         )
+        write_batch(out, index_dir, bid)
         mark_committed(part)
 
     q = (

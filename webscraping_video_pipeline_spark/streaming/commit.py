@@ -1,11 +1,12 @@
 """Per-batch commit markers for the foreachBatch sinks.
 
 Every streaming sink in this package is batch_id-partitioned with
-dynamic-partition overwrite, so an at-least-once replay of a batch can
-safely rewrite its own partitions. The replay GUARD, however, must not
-mistake a *partial* partition (crash mid job-commit: some task files
-renamed, some not) for a committed one — "directory exists and is
-non-empty" is not commitment. These helpers implement the discipline:
+dynamic-partition overwrite (``write_batch``), so an at-least-once replay
+of a batch can safely rewrite its own partitions. The replay GUARD,
+however, must not mistake a *partial* partition (crash mid job-commit:
+some task files renamed, some not) for a committed one — "directory
+exists and is non-empty" is not commitment. These helpers implement the
+discipline:
 
 - the batch's designated marker partition gets an explicit ``_COMMITTED``
   file written AFTER every sink of the batch has finished (underscore
@@ -30,6 +31,9 @@ from __future__ import annotations
 
 import os
 import shutil
+
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 _MARKER = "_COMMITTED"
 
@@ -61,3 +65,19 @@ def mark_committed(marker_part: str) -> None:
     os.makedirs(marker_part, exist_ok=True)
     with open(os.path.join(marker_part, _MARKER), "w", encoding="utf-8") as fh:
         fh.write("")
+
+
+def write_batch(df: DataFrame, base: str, batch_id: int) -> None:
+    """Write ``df`` as the ``batch_id=<batch_id>`` partition of ``base``.
+
+    Dynamic-partition overwrite: a replayed batch rewrites its own
+    partition instead of appending duplicates, and leaves every other
+    batch's partition alone.
+    """
+    (
+        df.withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id")
+        .parquet(base)
+    )

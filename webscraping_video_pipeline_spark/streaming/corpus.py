@@ -33,7 +33,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .commit import batch_committed, mark_committed, scrub_partial
+from .commit import batch_committed, mark_committed, scrub_partial, write_batch
 from .micro_batch import _has_batches
 
 CHUNK_WORDS = 3
@@ -101,24 +101,11 @@ def stream_chunk_dedup(spark: SparkSession, docs_dir: str, workdir: str) -> None
             F.count(F.lit(1)).alias("n_chunks"),
             F.sum((~keep).cast("long")).alias("n_dropped"),
             cleaned.alias("cleaned_text"),
-        ).withColumn("batch_id", F.lit(bid).cast("long"))
-        (
-            out.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_dir)
         )
+        write_batch(out, out_dir, bid)
         # seen delta last, then the marker: only this batch's NEWLY-KEPT
         # chunk hashes
-        (
-            ch.filter(keep)
-            .select("chunk_hash")
-            .withColumn("batch_id", F.lit(bid).cast("long"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(seen_dir)
-        )
+        write_batch(ch.filter(keep).select("chunk_hash"), seen_dir, bid)
         mark_committed(seen_part)
 
     from ..schemas import DOCUMENTS
@@ -155,19 +142,13 @@ def stream_intradoc_dedup(spark: SparkSession, docs_dir: str, workdir: str) -> N
         )
         d = d.withColumn("chs", chs)
         kept = F.expr("filter(chs, (c, i) -> array_position(chs, c) == i + 1)")
-        (
-            d.select(
-                "doc_id",
-                F.size("chs").cast("long").alias("n_chunks"),
-                (F.size("chs") - F.size(kept)).cast("long").alias("n_dropped"),
-                F.array_join(kept, " ").alias("cleaned_text"),
-            )
-            .withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_dir)
+        cleaned = d.select(
+            "doc_id",
+            F.size("chs").cast("long").alias("n_chunks"),
+            (F.size("chs") - F.size(kept)).cast("long").alias("n_dropped"),
+            F.array_join(kept, " ").alias("cleaned_text"),
         )
+        write_batch(cleaned, out_dir, batch_id)
 
     from ..schemas import DOCUMENTS
 

@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..contract.monitor import _HDR_PCTS, _HDR_S
-from .commit import batch_committed, mark_committed, scrub_partial
+from .commit import batch_committed, mark_committed, scrub_partial, write_batch
 
 # Mirrors the driver testdata `events` table.
 EVENTS = T.StructType(
@@ -88,15 +88,7 @@ def stream_hdr_buckets(spark: SparkSession, events_dir: str, workdir: str) -> No
         if batch_committed(part):
             return  # fully committed already (at-least-once replay)
         scrub_partial(part)
-        delta = _batch_delta(batch_df).withColumn(
-            "batch_id", F.lit(bid).cast("long")
-        )
-        (
-            delta.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(state_dir)
-        )
+        write_batch(_batch_delta(batch_df), state_dir, bid)
         mark_committed(part)
 
     q = (

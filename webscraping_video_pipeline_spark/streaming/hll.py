@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..contract.monitor import _HLL_ALPHA, _HLL_M, _HLL_MOD, _HLL_W
-from .commit import batch_committed, mark_committed, scrub_partial
+from .commit import batch_committed, mark_committed, scrub_partial, write_batch
 from .hostprior import DOCS
 
 
@@ -72,15 +72,7 @@ def stream_hll_registers(spark: SparkSession, docs_dir: str, workdir: str) -> No
         if batch_committed(part):
             return  # fully committed already (at-least-once replay)
         scrub_partial(part)
-        delta = _batch_delta(batch_df).withColumn(
-            "batch_id", F.lit(bid).cast("long")
-        )
-        (
-            delta.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(state_dir)
-        )
+        write_batch(_batch_delta(batch_df), state_dir, bid)
         mark_committed(part)
 
     q = (

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..contract.quality import _EB_HOSTS, _EB_M
-from .commit import batch_committed, mark_committed, scrub_partial
+from .commit import batch_committed, mark_committed, scrub_partial, write_batch
 
 # Mirrors the driver testdata `documents` table.
 DOCS = T.StructType(
@@ -82,15 +82,7 @@ def stream_host_prior(spark: SparkSession, docs_dir: str, workdir: str) -> None:
         if batch_committed(part):
             return  # fully committed already (at-least-once replay)
         scrub_partial(part)
-        delta = _batch_delta(batch_df).withColumn(
-            "batch_id", F.lit(bid).cast("long")
-        )
-        (
-            delta.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(state_dir)
-        )
+        write_batch(_batch_delta(batch_df), state_dir, bid)
         mark_committed(part)
 
     q = (

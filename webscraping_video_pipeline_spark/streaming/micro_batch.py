@@ -5,12 +5,15 @@ Reference semantic preserved: results are processed as they arrive off the
 scraper queue while producers still run
 (``parallel_scraper_manager.py:356-411``); here newly discovered seed
 files land in a directory, Structured Streaming picks them up, and each
-micro-batch runs the scheduling front half of a crawl round — canonicalize
--> dedupe against the accumulated seen set -> politeness slots — appending
-its decisions to ``scheduled_log`` and its URLs to the cross-batch seen
-state. The batch round loop (``plans/crawl.py``) stays the reproducibility
-reference; this is the low-latency ingestion twin built on the same
-operators.
+micro-batch ``k`` runs crawl round ``k`` over the newly landed seeds.
+
+Both twins call the round kernel of ``plans/crawl.py`` — the same
+``schedule_frontier`` / ``fetch_round`` / ``advance_frontier`` functions
+``CrawlEngine.run_round`` calls, with the same ``CrawlConfig`` — and keep
+only their own I/O: ``batch_id`` partitions written with dynamic
+overwrite, scrubbed on replay and committed by a ``_COMMITTED`` marker
+(``commit.py``). The stream keeps no seen-set prefilter: dedupe is the
+exact anti-join (``use_bloom`` and the shard options do not apply).
 """
 
 from __future__ import annotations
@@ -20,10 +23,31 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.dedup import dedupe_against_seen
-from ..operators.politeness import schedule_round
-from ..plans.crawl import BASE_ROUND_TS, canonicalize_candidates
-from .commit import batch_committed, mark_committed, scrub_partial
+from ..operators.politeness import max_bucket_capacity
+from ..plans.crawl import (
+    FRONTIER_COLS,
+    CrawlConfig,
+    advance_frontier,
+    fetch_round,
+    schedule_frontier,
+    seed_frontier,
+)
+from ..schemas import SEEDS
+from .commit import batch_committed, mark_committed, scrub_partial, write_batch
+
+
+def _run_stream(spark: SparkSession, seeds_dir: str, workdir: str, round_fn) -> None:
+    """Drain every available seed file (trigger availableNow) through
+    ``round_fn(batch_df, batch_id)``."""
+    q = (
+        spark.readStream.schema(SEEDS)
+        .parquet(seeds_dir)
+        .writeStream.foreachBatch(round_fn)
+        .option("checkpointLocation", f"{workdir}/ckpt")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
 
 
 def stream_frontier_rounds(
@@ -31,23 +55,23 @@ def stream_frontier_rounds(
     seeds_dir: str,
     workdir: str,
     host_policy: DataFrame,
-    round_interval_s: int = 3600,
-    salts: int = 4,
+    cfg: CrawlConfig | None = None,
 ) -> None:
-    """Drain all available seed files (trigger availableNow) through
-    per-micro-batch scheduling rounds. Restartable AND idempotent:
-    foreachBatch gives at-least-once delivery, so both sinks are
-    partitioned by ``batch_id`` and written with dynamic-partition
-    overwrite — a replayed batch_id rewrites its own partition instead of
-    appending duplicates. Commitment is an explicit ``_COMMITTED`` marker
-    in the seen-side partition, dropped AFTER both writes (commit.py): a
-    replay of an unmarked batch scrubs its partial partitions and rewrites
-    both, preserving the no-URL-scheduled-twice invariant across
-    crash/restart."""
-    from ..schemas import SEEDS
+    """The scheduling half of a crawl round per micro-batch: the landed
+    seeds are deduped against the accumulated seen set and slotted by
+    politeness (no robots, no fetch, no pending state); the admitted URLs
+    go to ``scheduled_log`` and to the seen set.
 
+    Restartable AND idempotent: foreachBatch gives at-least-once delivery,
+    so both sinks are ``batch_id`` partitions written with dynamic
+    overwrite. Commitment is the ``_COMMITTED`` marker in the seen-side
+    partition, dropped AFTER both writes: a replay of an unmarked batch
+    scrubs its partial partitions and rewrites both, preserving the
+    no-URL-scheduled-twice invariant across crash/restart."""
+    cfg = cfg or CrawlConfig()
     seen_dir = f"{workdir}/seen"
     out_dir = f"{workdir}/scheduled_log"
+    max_cap = max_bucket_capacity(host_policy, cfg.default_capacity)
 
     def round_fn(batch_df: DataFrame, batch_id: int) -> None:
         bid = int(batch_id)
@@ -55,52 +79,25 @@ def stream_frontier_rounds(
         if batch_committed(seen_part):
             return  # batch fully committed (at-least-once replay)
         scrub_partial(seen_part, f"{out_dir}/batch_id={bid}")
-        cands = canonicalize_candidates(batch_df, "url").withColumn(
-            "priority", F.coalesce(F.col("priority"), F.lit(0.0))
-        )
-        # _has_batches, not a bare listdir: a crash can leave only _SUCCESS
-        # behind, which would make the parquet read fail schema inference
         seen = spark.read.parquet(seen_dir) if _has_batches(seen_dir) else None
-        fresh = dedupe_against_seen(cands, seen, None)
-        round_ts = F.lit(BASE_ROUND_TS).cast("timestamp") + F.make_interval(
-            secs=F.lit(bid * round_interval_s)
-        )
-        sched = schedule_round(fresh, host_policy, round_ts, salts=salts).withColumn(
-            "batch_id", F.lit(bid).cast("long")
+        sched, _ = schedule_frontier(
+            seed_frontier(batch_df), bid, seen, None, host_policy, None, cfg, max_cap
         )
         # scheduled_log first, seen last: a crash between the two leaves the
         # commit marker absent, so the replay rewrites both partitions
-        (
-            sched.select(
-                "canon_url", "url_hash", "host", "slot", "scheduled_ts", "batch_id"
-            )
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_dir)
+        write_batch(
+            sched.select("canon_url", "url_hash", "host", "slot", "scheduled_ts"),
+            out_dir,
+            bid,
         )
-        (
-            sched.select(
-                "url_hash",
-                "canon_url",
-                F.lit(bid).cast("int").alias("seen_round"),
-                "batch_id",
-            )
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(seen_dir)
+        seen_delta = sched.select(
+            "url_hash", "canon_url", F.lit(bid).cast("int").alias("seen_round")
         )
+        write_batch(seen_delta, seen_dir, bid)
         mark_committed(seen_part)
+        sched.unpersist()
 
-    stream = spark.readStream.schema(SEEDS).parquet(seeds_dir)
-    q = (
-        stream.writeStream.foreachBatch(round_fn)
-        .option("checkpointLocation", f"{workdir}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_stream(spark, seeds_dir, workdir, round_fn)
 
 
 def _has_batches(base: str) -> bool:
@@ -141,56 +138,39 @@ def stream_crawl_rounds(
     pages: DataFrame,
     host_policy: DataFrame,
     robots_cache: DataFrame | None = None,
-    round_interval_s: int = 3600,
-    salts: int = 4,
-    max_attempts: int = 3,
-    default_delay_s: float = 1.0,
-    default_capacity: int = 4,
-    discover_outlinks: bool = False,
+    cfg: CrawlConfig | None = None,
 ) -> None:
     """The FULL crawl round as a streaming micro-batch — the low-latency
-    twin of ``plans/crawl.py::CrawlEngine.run_round`` including the retry /
-    circuit-breaker bookkeeping the schedule-only twin above omits:
+    twin of ``plans/crawl.py::CrawlEngine.run_round``, running the same
+    round kernel: micro-batch k's frontier is the pending snapshot of
+    batch k-1 plus the newly landed seeds, and round k (robots, politeness,
+    fetch against ``pages`` (the ``prepare_pages`` output), extract, retry
+    backoff and 3-strike breaker, outlink discovery when
+    ``cfg.discover_outlinks``) turns it into batch k's outputs. The
+    streamed fetch_log, extracted and pending state are row-identical to
+    the batch engine's fetch_log, extracted and frontier on the same input
+    (asserted by ``tests/test_streaming.py``). ``robots_cache`` None skips
+    the robots stage.
 
-    micro-batch k = canonicalize new seeds ∪ due pending rows -> dedupe
-    against seen -> politeness slots -> fetch against ``pages`` -> fetch_log;
-    misses back off exponentially (``next_attempt_batch = k + 2**attempts``)
-    and strike out at ``max_attempts`` (reference
-    ``parallel_scraper_manager.py:171-178``, ``cloud_storage.py:159-208``),
-    exactly as the batch round loop computes them — so the streamed
-    fetch_log is row-identical to the batch engine's on the same input
-    (asserted by ``tests/test_streaming.py``).
-
-    State across batches (each a batch_id-partitioned parquet dir; the seen
-    partition is written LAST and doubles as the commit marker, making
-    at-least-once foreachBatch replay idempotent and restart-safe):
+    State across batches (each a batch_id-partitioned parquet dir; the
+    ``_COMMITTED`` marker in the seen partition, dropped after every
+    write, makes at-least-once foreachBatch replay idempotent and
+    restart-safe):
 
     - ``seen``      — append-only delta per batch (fetched + struck-out)
-    - ``pending``   — SNAPSHOT per batch of the live frontier (not-admitted
-                      survivors + deferred + retryable)
-    - ``fetch_log`` / ``scheduled_log`` — per-batch appends
+    - ``pending``   — SNAPSHOT per batch of the live frontier
+                      (``schemas.FRONTIER``)
+    - ``fetch_log`` / ``extracted`` / ``scheduled_log`` — per-batch appends
     """
-    from ..schemas import SEEDS
-
+    cfg = cfg or CrawlConfig()
     seen_dir = f"{workdir}/seen"
     pending_dir = f"{workdir}/pending"
     fetch_dir = f"{workdir}/fetch_log"
+    extracted_dir = f"{workdir}/extracted"
     sched_dir = f"{workdir}/scheduled_log"
-    pages_prepared = pages  # caller passes prepare_pages() output
-    max_cap = None  # resolved lazily once, outside the per-batch hot path
-
-    pend_cols = [
-        "url", "canon_url", "url_hash", "host", "priority",
-        "attempts", "next_attempt_batch",
-    ]
+    max_cap = max_bucket_capacity(host_policy, cfg.default_capacity)
 
     def round_fn(batch_df: DataFrame, batch_id: int) -> None:
-        nonlocal max_cap
-        from ..operators.frontier import fetch_join
-        from ..operators.politeness import max_bucket_capacity
-
-        if max_cap is None:
-            max_cap = max_bucket_capacity(host_policy, default_capacity)
         bid = int(batch_id)
         seen_part = f"{seen_dir}/batch_id={bid}"
         if batch_committed(seen_part):
@@ -198,193 +178,39 @@ def stream_crawl_rounds(
         scrub_partial(
             seen_part,
             f"{fetch_dir}/batch_id={bid}",
+            f"{extracted_dir}/batch_id={bid}",
             f"{sched_dir}/batch_id={bid}",
             f"{pending_dir}/batch_id={bid}",
         )
 
-        new_cands = canonicalize_candidates(batch_df, "url").select(
-            "url", "canon_url", "url_hash", "host",
-            F.coalesce(F.col("priority"), F.lit(0.0)).alias("priority"),
-            F.lit(0).alias("attempts"),
-            F.lit(0).alias("next_attempt_batch"),
-        )
-        prev_pending_path = _latest_partition(pending_dir, bid)
-        pending = (
-            spark.read.parquet(prev_pending_path).select(*pend_cols)
-            if prev_pending_path
-            else None
-        )
-        cands = new_cands
-        deferred = None
-        if pending is not None:
-            due = pending.filter(F.col("next_attempt_batch") <= bid)
-            deferred = pending.filter(F.col("next_attempt_batch") > bid)
-            cands = cands.unionByName(due)
-
+        frontier = seed_frontier(batch_df)
+        prev_pending = _latest_partition(pending_dir, bid)
+        if prev_pending:
+            pending = spark.read.parquet(prev_pending).select(*FRONTIER_COLS)
+            frontier = pending.unionByName(frontier)
         seen = spark.read.parquet(seen_dir) if _has_batches(seen_dir) else None
-        fresh = dedupe_against_seen(cands, seen, None)
-        round_ts = F.lit(BASE_ROUND_TS).cast("timestamp") + F.make_interval(
-            secs=F.lit(bid * round_interval_s)
-        )
-        # P2 parity with the batch round: robots disallow filter (disallowed
-        # URLs leave the crawl — they are not kept pending) and per-host
-        # crawl-delay override of the policy dim
-        policy = host_policy
-        allowed = fresh
-        if robots_cache is not None:
-            from ..operators.robots import apply_robots, resolve_robots_asof
 
-            robots = resolve_robots_asof(robots_cache, round_ts)
-            allowed = apply_robots(fresh, robots, url_col="canon_url").drop(
-                "robots_delay_s"
-            )
-            policy = (
-                host_policy.join(
-                    robots.select("host", F.col("crawl_delay_s").alias("_rd")),
-                    "host",
-                    "left",
-                )
-                .withColumn(
-                    "crawl_delay_s", F.coalesce(
-                    F.nanvl(F.col("_rd"), F.lit(None).cast("double")), F.col("crawl_delay_s")
-                )
-                )
-                .drop("_rd")
-            )
-        sched = schedule_round(
-            allowed,
-            policy,
-            round_ts,
-            default_delay_s=default_delay_s,
-            default_capacity=default_capacity,
-            salts=salts,
-            max_capacity=max_cap,
+        sched, waiting = schedule_frontier(
+            frontier, bid, seen, None, host_policy, robots_cache, cfg, max_cap
         )
-        joined = fetch_join(
-            sched, pages_prepared.select("canon_url", "warc_ts", "html", "lang")
-        )
-        # html streams through ONE projection and is never cached (same
-        # rule as the batch round): harvest hrefs here when discovery is on
-        derived = []
-        if discover_outlinks:
-            derived.append(
-                F.regexp_extract_all(
-                    F.decode(F.col("html"), "utf-8"), F.lit('href="([^"]+)"'), F.lit(1)
-                ).alias("_outlinks")
-            )
-        fetched = joined.select(
-            *[c for c in joined.columns if c != "html"], *derived
-        )
-        fetched.cache()
-
-        misses = (
-            fetched.filter(F.col("status") == "miss")
-            .select(*pend_cols)
-            .withColumn("attempts", F.col("attempts") + 1)
-            .withColumn(
-                "next_attempt_batch",
-                F.lit(bid) + F.pow(F.lit(2.0), F.col("attempts")).cast("int"),
-            )
-        )
-        retryable = misses.filter(F.col("attempts") < max_attempts)
-        exhausted = misses.filter(F.col("attempts") >= max_attempts)
-
-        survivors = allowed.join(
-            fetched.select("url_hash"), "url_hash", "left_anti"
-        ).select(*pend_cols)
-        pending_next = survivors.unionByName(retryable.select(*pend_cols))
-        if deferred is not None:
-            pending_next = pending_next.unionByName(deferred.select(*pend_cols))
-
-        # outlink discovery — same deterministic merge as the batch round:
-        # existing pending rows (pairwise-disjoint hashes) beat discovered,
-        # then (priority DESC, canon ASC, url ASC) among discovered dups
-        if discover_outlinks:
-            hrefs = (
-                fetched.filter(F.col("status") == "fetched")
-                .select(F.explode(F.col("_outlinks")).alias("_raw"))
-                .select(
-                    F.regexp_replace(F.col("_raw"), F.lit("&amp;"), F.lit("&")).alias("url")
-                )
-                .filter(F.col("url").startswith("http"))
-            )
-            discovered = canonicalize_candidates(hrefs, "url").select(
-                "url",
-                "canon_url",
-                "url_hash",
-                "host",
-                (1.0 / (1 + F.pmod(F.xxhash64("canon_url"), F.lit(1000)))).alias(
-                    "priority"
-                ),
-                F.lit(0).alias("attempts"),
-                F.lit(bid + 1).alias("next_attempt_batch"),
-            )
-            from pyspark.sql import Window
-
-            w_merge = Window.partitionBy("url_hash").orderBy(
-                F.col("_cat").asc(),
-                F.col("priority").desc(),
-                F.col("canon_url").asc(),
-                F.col("url").asc(),
-            )
-            pending_next = (
-                pending_next.withColumn("_cat", F.lit(0))
-                .unionByName(discovered.withColumn("_cat", F.lit(1)))
-                .withColumn("_rn", F.row_number().over(w_merge))
-                .filter(F.col("_rn") == 1)
-                .drop("_rn", "_cat")
-            )
-
-        newly_seen = (
-            fetched.filter(F.col("status") == "fetched")
-            .select("url_hash", "canon_url")
-            .unionByName(exhausted.select("url_hash", "canon_url"))
-            .select(
-                "url_hash", "canon_url",
-                F.lit(bid).cast("int").alias("seen_round"),
-            )
-        )
-        # anti-join vs THIS batch's seen delta only: a discovered/deferred
-        # hash seen in an earlier batch is removed at candidacy time by
-        # dedupe_against_seen, so fetch decisions match the batch engine
-        pending_next = pending_next.join(
-            newly_seen.select("url_hash"), "url_hash", "left_anti"
-        )
-
-        def _write(df: DataFrame, base: str) -> None:
-            (
-                df.withColumn("batch_id", F.lit(bid).cast("long"))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(base)
-            )
+        fetch = fetch_round(sched, pages, bid, cfg)
+        pending_next = advance_frontier(waiting, fetch, bid, cfg, seen, fetch.newly_seen)
 
         # commit order: logs + pending, then seen, then the _COMMITTED marker
-        _write(
-            fetched.select(
-                "canon_url", "url_hash", "host", "scheduled_ts",
-                F.col("slot").cast("int").alias("slot"), "status",
-            ),
-            fetch_dir,
-        )
-        _write(
-            fetched.select("canon_url", "url_hash", "host", "slot", "scheduled_ts"),
+        write_batch(fetch.fetch_log, fetch_dir, bid)
+        write_batch(fetch.extracted, extracted_dir, bid)
+        write_batch(
+            fetch.rows.select("canon_url", "url_hash", "host", "slot", "scheduled_ts"),
             sched_dir,
+            bid,
         )
         # pending is a SNAPSHOT: write its batch dir directly (a partitionBy
         # write would emit nothing for an empty frontier, and a later batch
         # would then wrongly resurrect the previous snapshot)
         pending_next.write.mode("overwrite").parquet(f"{pending_dir}/batch_id={bid}")
-        _write(newly_seen, seen_dir)
+        write_batch(fetch.newly_seen, seen_dir, bid)
         mark_committed(seen_part)
-        fetched.unpersist()
+        sched.unpersist()
+        fetch.rows.unpersist()
 
-    stream = spark.readStream.schema(SEEDS).parquet(seeds_dir)
-    q = (
-        stream.writeStream.foreachBatch(round_fn)
-        .option("checkpointLocation", f"{workdir}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_stream(spark, seeds_dir, workdir, round_fn)

@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.lsh import MINHASH_BUCKET_CAP, cap_buckets
-from .commit import batch_committed, mark_committed, scrub_partial
+from .commit import batch_committed, mark_committed, scrub_partial, write_batch
 from .micro_batch import _has_batches
 
 JACCARD_THRESHOLD = 0.7
@@ -233,30 +233,10 @@ def stream_neardup_dedup(spark: SparkSession, docs_dir: str, workdir: str) -> No
         )
         kept = _greedy_resolve(spark, docs, dropped0, edges)
 
-        out = (
-            docs.join(kept, "doc_id")
-            .withColumn("batch_id", F.lit(bid).cast("long"))
-        )
-        out.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("batch_id").parquet(out_dir)
-        (
-            bands.join(kept, "doc_id")
-            .withColumn("batch_id", F.lit(bid).cast("long"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(bands_dir)
-        )
+        write_batch(docs.join(kept, "doc_id"), out_dir, bid)
+        write_batch(bands.join(kept, "doc_id"), bands_dir, bid)
         # word-hash delta last, then the marker
-        (
-            wh.join(kept, "doc_id")
-            .withColumn("batch_id", F.lit(bid).cast("long"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(wh_dir)
-        )
+        write_batch(wh.join(kept, "doc_id"), wh_dir, bid)
         mark_committed(marker)
 
     from ..schemas import DOCUMENTS

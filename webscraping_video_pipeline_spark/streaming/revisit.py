@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .commit import batch_committed, mark_committed, scrub_partial
+from .commit import batch_committed, mark_committed, scrub_partial, write_batch
 from .micro_batch import _has_batches
 
 # Mirrors the driver testdata `events` table (fetch-observation source).
@@ -122,15 +122,7 @@ def stream_revisit_state(spark: SparkSession, events_dir: str, workdir: str) -> 
         if batch_committed(part):
             return  # fully committed already (at-least-once replay)
         scrub_partial(part)
-        delta = _batch_delta(batch_df, _state_tail(spark, state_dir)).withColumn(
-            "batch_id", F.lit(bid).cast("long")
-        )
-        (
-            delta.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(state_dir)
-        )
+        write_batch(_batch_delta(batch_df, _state_tail(spark, state_dir)), state_dir, bid)
         mark_committed(part)
 
     q = (

@@ -35,7 +35,7 @@ from ..contract.monitor import (
     _SKEW_PARTS,
     _SKEW_SALTS,
 )
-from .commit import batch_committed, mark_committed, scrub_partial
+from .commit import batch_committed, mark_committed, scrub_partial, write_batch
 from .takedown import EVENTS
 
 
@@ -87,15 +87,7 @@ def stream_skew(spark: SparkSession, events_dir: str, workdir: str) -> None:
         if batch_committed(part):
             return  # fully committed already (at-least-once replay)
         scrub_partial(part)
-        delta = _batch_delta(batch_df).withColumn(
-            "batch_id", F.lit(bid).cast("long")
-        )
-        (
-            delta.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(state_dir)
-        )
+        write_batch(_batch_delta(batch_df), state_dir, bid)
         mark_committed(part)
 
     q = (

@@ -42,7 +42,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .commit import batch_committed, mark_committed, scrub_partial
+from .commit import batch_committed, mark_committed, scrub_partial, write_batch
 from .hostprior import DOCS
 
 
@@ -93,13 +93,7 @@ def stream_vocab_state(spark: SparkSession, docs_dir: str, workdir: str) -> None
             new = bw
         new = new.localCheckpoint(eager=True)  # counted AND written below
         n_new = new.count()
-        (
-            new.withColumn("batch_id", F.lit(bid).cast("long"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(state_dir)
-        )
+        write_batch(new, state_dir, bid)
         counts = spark.createDataFrame(
             [
                 (
@@ -110,13 +104,8 @@ def stream_vocab_state(spark: SparkSession, docs_dir: str, workdir: str) -> None
                 )
             ],
             "n_docs long, n_tokens long, n_batch_words long, n_new_words long",
-        ).withColumn("batch_id", F.lit(bid).cast("long"))
-        (
-            counts.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(counts_dir)
         )
+        write_batch(counts, counts_dir, bid)
         mark_committed(cpart)
 
     q = (
